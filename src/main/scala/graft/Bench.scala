@@ -51,7 +51,10 @@ object Bench {
     // design), so dropping unreferenced blocks cannot change any result.
     val settle = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE", "0") == "1"
 
-    def execute(name: String): Double = {
+    // One timed run: (wall seconds, succeeded). A failed run keeps the
+    // wall it spent before failing, so a failure never makes the sweep
+    // read faster; the query is named in the artifact's `failed` list.
+    def execute(name: String): (Double, Boolean) = {
       ensureAlive()
       if (settle)
         spark.sparkContext.getPersistentRDDs.values
@@ -61,7 +64,9 @@ object Bench {
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
+        val sec = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench] $name failed after $sec%.1f s: ${e.getMessage}")
+        return (sec, false)
       }
       val sec = (System.nanoTime() - t0) / 1e9
       // leak visibility: persisted RDDs still registered after the action
@@ -75,40 +80,52 @@ object Bench {
         System.err.println(f"[bench-run] $name $sec%.3f s gc=${gcMillis - gc0} ms up=$up%.0f s persisted=$live")
       }
       if (live > 0) System.err.println(f"[bench] $name: $sec%.1f s, $live persisted RDDs still registered")
-      sec
+      (sec, true)
+    }
+    // median wall over `runs` timed runs, and whether every run succeeded
+    def measure(name: String): (Double, Boolean) = {
+      val rs = (1 to runs).map(_ => execute(name))
+      (rs.map(_._1).sorted.apply(runs / 2), rs.forall(_._2))
     }
 
     def loadavg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    // Hypervisor steal over a short sampling window (Linux /proc/stat
-    // field 8; 0.0 where unavailable). Two full sweeps this round were
+    val ncpu = Runtime.getRuntime.availableProcessors
+    // Busy cores (non-idle share of all jiffies × ncpu) and hypervisor
+    // steal % over a short sampling window, from the first line of Linux
+    // /proc/stat ((0, 0) where unavailable). Steal: two full sweeps were
     // contaminated 40-70% at loadavg < 3 — loadavg counts RUNNABLE
-    // threads and is blind to a co-tenant stealing the physical cores,
-    // which this box's vmstat shows even at idle. Sampled OUTSIDE every
-    // timed region; recorded in the artifact so a steal episode is
-    // adjudicable from the capture itself.
-    def stealPct(windowMs: Long = 1000): Double = {
-      def read(): Option[(Long, Long)] =
+    // threads and is blind to a co-tenant stealing the physical cores.
+    // Busy cores: the one-minute loadavg still carries the previous run
+    // long after it ended, so the gate reads what the CPUs did just now.
+    // Sampled OUTSIDE every timed region; recorded in the artifact so a
+    // contended capture is adjudicable from the capture itself.
+    def cpuSample(windowMs: Long = 1000): (Double, Double) = {
+      def read(): Option[(Long, Long, Long)] =
         try {
           val f = java.nio.file.Files
             .readAllLines(java.nio.file.Paths.get("/proc/stat")).get(0)
             .trim.split("\\s+").drop(1).map(_.toLong)
-          if (f.length >= 8) Some((f.sum, f(7))) else None
+          if (f.length >= 8) Some((f.sum, f(3) + f(4), f(7))) else None
         } catch { case _: Throwable => None }
       val a = read(); Thread.sleep(windowMs); val b = read()
       (a, b) match {
-        case (Some((t0, s0)), Some((t1, s1))) if t1 > t0 =>
-          100.0 * (s1 - s0) / (t1 - t0)
-        case _ => 0.0
+        case (Some((t0, i0, s0)), Some((t1, i1, s1))) if t1 > t0 =>
+          val dt = (t1 - t0).toDouble
+          ((1.0 - (i1 - i0) / dt) * ncpu, 100.0 * (s1 - s0) / dt)
+        case _ => (0.0, 0.0)
       }
     }
     // Cool-down gate (r15 verdict item 6): three rounds of drift-vs-
     // regression adjudication came down to "was the box loaded at capture
-    // time". Wait (bounded) for loadavg to drop under the gate before the
-    // timed pass, and record the load at start AND end in the artifact so
-    // the adjudication is mechanical. SPARK_GRAFT_BENCH_COOLDOWN_SECS=0
-    // disables the wait (the loads are still recorded).
-    val coolGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "3.0").toDouble
+    // time". Wait (bounded) until fewer than a quarter of the cores are
+    // busy before the timed pass — perfbench's rule; the old fixed loadavg
+    // 3.0 admitted a 4-core box that was 75% busy — and record the load at
+    // start AND end in the artifact so the adjudication is mechanical.
+    // SPARK_GRAFT_BENCH_COOLDOWN_SECS=0 disables the wait (the loads are
+    // still recorded).
+    val coolGate = sys.env.get("SPARK_GRAFT_BENCH_LOAD_GATE").map(_.toDouble)
+      .getOrElse(0.25 * ncpu)
     // steal gate: idle baseline on this box is 0-4%; contaminated windows
     // are the co-tenant-episode regime. Bounded by the SAME coolMax budget
     // as the load gate, so a permanently stolen box still benches (with
@@ -116,14 +133,14 @@ object Bench {
     val stealGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_STEAL_GATE", "5.0").toDouble
     val coolMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_COOLDOWN_SECS", "300").toInt
     var waited = 0
-    var steal = stealPct()
-    while ((loadavg >= coolGate || steal >= stealGate) && waited < coolMax) {
-      System.err.println(f"[bench] loadavg ${loadavg}%.1f (gate $coolGate%.1f) steal $steal%.1f%% " +
+    var (busy, steal) = cpuSample()
+    while ((busy >= coolGate || steal >= stealGate) && waited < coolMax) {
+      System.err.println(f"[bench] $busy%.1f busy cores (gate $coolGate%.1f) steal $steal%.1f%% " +
         f"(gate $stealGate%.1f%%) — cooling down ($waited/$coolMax s)")
       Thread.sleep(15000); waited += 15
-      steal = stealPct()
+      val s = cpuSample(); busy = s._1; steal = s._2
     }
-    val stealStart = steal
+    val (busyStart, stealStart) = (busy, steal)
 
     // loadavg_start is the POST-COOLDOWN, PRE-WARMUP load — the state the
     // cool-down gate actually validated (sampling after warmup recorded
@@ -140,19 +157,19 @@ object Bench {
     }
     val loadWarmed = loadavg
 
-    val results = names.map { n =>
-      val times = (1 to runs).map(_ => execute(n)).filter(_ >= 0).sorted
-      n -> (if (times.isEmpty) -1.0 else times(times.size / 2))
-    }
+    val measured = names.map(n => n -> measure(n))
+    val results = measured.map { case (n, (sec, _)) => n -> sec }
+    val failed = measured.collect { case (n, (_, false)) => n }
+    val failedJson = failed.map("\"" + _ + "\"").mkString(
+      ",\"failed_n\":" + failed.size + ",\"failed\":[", ",", "]")
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.map(_._2).sum
     // record box contention in the artifact itself: a loaded machine has
     // produced 2-5x inflated per-query walls in past rounds, and without
     // the load average in the JSON that is indistinguishable from a code
     // regression after the fact
     val load = loadavg
-    val ncpu = Runtime.getRuntime.availableProcessors
     if (load > ncpu * 0.5)
       System.err.println(f"[bench] WARNING: loadavg $load%.1f on $ncpu cpus — " +
         "box is contended; walls are inflated")
@@ -168,10 +185,9 @@ object Bench {
     val recheckJson =
       if (recheckN <= 0) ""
       else {
-        val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(recheckN)
+        val slowest = results.filterNot(r => failed.contains(r._1)).sortBy(-_._2).take(recheckN)
         val entries = slowest.map { case (n, full) =>
-          val times = (1 to runs).map(_ => execute(n)).filter(_ >= 0).sorted
-          val iso = if (times.isEmpty) -1.0 else times(times.size / 2)
+          val iso = measure(n)._1
           "\"" + n + "\":{\"full\":" + f"$full%.3f" +
             ",\"isolated\":" + f"$iso%.3f" + "}"
         }
@@ -191,8 +207,8 @@ object Bench {
       System.err.println(s"[bench] WARNING: $persistedEnd persisted RDDs still " +
         "registered at end of sweep — possible persist leak (expect ~0 after periodic GC)")
 
-    val stealEnd = stealPct()
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg":$load%.2f,"loadavg_start":$loadStart%.2f,"loadavg_warmed":$loadWarmed%.2f,"cooldown_waited_sec":$waited,"ncpu":$ncpu,"steal_pct_start":$stealStart%.2f,"steal_pct_end":$stealEnd%.2f,"persisted_rdds_end":$persistedEnd""" + recheckJson + "}"
+    val stealEnd = cpuSample()._2
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs""" + failedJson + f""","sf":"$sfDir","loadavg":$load%.2f,"loadavg_start":$loadStart%.2f,"loadavg_warmed":$loadWarmed%.2f,"busy_cores_start":$busyStart%.2f,"load_gate_busy_cores":$coolGate%.2f,"cooldown_waited_sec":$waited,"ncpu":$ncpu,"steal_pct_start":$stealStart%.2f,"steal_pct_end":$stealEnd%.2f,"persisted_rdds_end":$persistedEnd""" + recheckJson + "}"
     println(line)
     // also persist to a file: the driver's stdout tail-capture has
     // truncated the per-query map in past rounds (BENCH_r10 kept 72/144
@@ -231,8 +247,8 @@ object Bench {
     // LAST stdout line is a SHORT summary the driver's tail-capture can
     // never truncate (the full long line above has been head-truncated in
     // past rounds' artifacts — BENCH_r11 kept 72/148 entries)
-    val nOk = results.count(_._2 >= 0)
-    println(f"""{"metric":"summary","value":$total%.3f,"unit":"sec","n":$nOk,"total":$total%.3f,"pace":${if (nOk > 0) total / nOk else -1.0}%.3f,"sf":"$sfDir","loadavg":$load%.2f,"file":"$benchFile"}""")
+    val n = results.size
+    println(f"""{"metric":"summary","value":$total%.3f,"unit":"sec","n":$n,"total":$total%.3f,"pace":${if (n > 0) total / n else -1.0}%.3f""" + failedJson + f""","sf":"$sfDir","loadavg":$load%.2f,"file":"$benchFile"}""")
     spark.stop()
   }
 }

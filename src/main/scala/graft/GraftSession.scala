@@ -65,6 +65,22 @@ object GraftSession {
       // store with column families — RocksDB, bundled with Spark.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // Local files through a Hadoop filesystem that never starts a
+      // process. Without libhadoop the stock one runs `chmod` on every
+      // create and `readlink` twice on every FileContext rename: 6,468 of
+      // the 6,977 spawns in one perfbench stream_stateful run (~115 per
+      // stateful micro-batch), most of the ~1 s per-batch floor. With this
+      // filesystem and changelog commits the run spawns 101. See
+      // graft.sources.ForkFreeLocalFs and BASELINE.md.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.ForkFreeLocalFs].getName)
+      // A state commit appends one changelog file per partition instead of
+      // flushing, zipping and uploading a RocksDB snapshot and deleting
+      // its working copy (`rm -rf`); snapshots are taken in the background
+      // every few batches. Restores checkpoints written either way.
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       // Catalyst extensions (a NO-OP unless spark.graft.* confs enable a
       // rule — see graft.plans.GraftExtensions)
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)

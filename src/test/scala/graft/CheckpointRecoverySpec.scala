@@ -129,15 +129,15 @@ class CheckpointRecoverySpec extends SparkSpec {
     }
   }
 
-  test("stateful ParDo: an event-time timer registered before the stop fires after restart") {
+  /** Stateful ParDo counting elements per key, emitting (k, count) ONLY
+    * from the timer set 10 s past the key's latest element — so any output
+    * at all proves the timer (and the count it reads) crossed a restart
+    * inside the state store. */
+  private def timerCounts(input: MemoryStream[(String, Timestamp)]): DataFrame = {
     Stateful.requireRocksDBStateStore(spark)
-    val input = MemoryStream[(String, Timestamp)](spark)
     val events = input.toDF().toDF("k", "t")
       .withWatermark("t", "0 seconds").as[(String, Timestamp)]
-    // count elements per key; emit ONLY from the timer set 10 s past the
-    // latest element — so any output at all proves the timer (and the
-    // count it reads) crossed the restart inside the state store
-    val out = Stateful.statefulParDo[String, (String, Timestamp),
+    Stateful.statefulParDo[String, (String, Timestamp),
         (String, Long), ValueState[Long]](
       events.groupByKey(_._1), TimeMode.EventTime(), OutputMode.Append()) {
         h => h.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
@@ -151,6 +151,11 @@ class CheckpointRecoverySpec extends SparkSpec {
       } { case (k, n, _, _, _) =>
         Iterator((k, if (n.exists()) n.get() else -1L))
       }.toDF("k", "n")
+  }
+
+  test("stateful ParDo: an event-time timer registered before the stop fires after restart") {
+    val input = MemoryStream[(String, Timestamp)](spark)
+    val out = timerCounts(input)
     val cp = ckpt()
     val outDir = Files.createTempDirectory("graft-rec-out").toString
     def sink = spark.read.schema("k STRING, n LONG").parquet(outDir)
@@ -174,6 +179,53 @@ class CheckpointRecoverySpec extends SparkSpec {
       assert(rows == Seq(("a", 2L)),
         s"recovered timer must fire once with the recovered count, got $rows")
     } finally q2.stop()
+  }
+
+  test("changelog state commits restore a checkpoint written with snapshot commits") {
+    // checkpoints written before the library turned on RocksDB changelog
+    // commits hold only snapshots; a restart with changelogs on must
+    // restore their state and surface every result exactly once
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val input = MemoryStream[(String, Timestamp)](spark)
+    val out = timerCounts(input)
+    val cp = ckpt()
+    val outDir = Files.createTempDirectory("graft-rec-out").toString
+    def sink = spark.read.schema("k STRING, n LONG").parquet(outDir)
+    def stateFiles(suffix: String): Long = {
+      val walk = Files.walk(java.nio.file.Paths.get(cp, "state"))
+      try walk.filter(_.getFileName.toString.endsWith(suffix)).count() finally walk.close()
+    }
+
+    // run 1, snapshot commits: keys a and b counted over two batches,
+    // timers parked at 11 s and 12 s
+    val sessionDefault = spark.conf.get(changelog)
+    spark.conf.set(changelog, "false")
+    val q1 = try restartable(out, outDir, cp).start() finally spark.conf.set(changelog, sessionDefault)
+    try {
+      input.addData(("a", ts(500)), ("a", ts(1000)))
+      q1.processAllAvailable()
+      input.addData(("b", ts(2000)))
+      q1.processAllAvailable()
+      assert(sink.count() == 0, "timers must still be parked at the stop")
+    } finally q1.stop()
+    assert(stateFiles(".zip") > 0 && stateFiles(".changelog") == 0,
+      "run 1 must commit snapshots only")
+
+    // run 2, the session default (changelog commits): one more element
+    // for a (count 3, a second timer at 13 s), then a rider whose
+    // watermark (60 s) fires each of the three timers exactly once
+    assert(sessionDefault == "true")
+    val q2 = restartable(out, outDir, cp).start()
+    try {
+      input.addData(("a", ts(3000)))
+      q2.processAllAvailable()
+      input.addData(("__wm", ts(60000)))
+      q2.processAllAvailable()
+      val rows = sink.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+      assert(rows == Seq(("a", 3L), ("a", 3L), ("b", 1L)),
+        s"each timer must fire once with the recovered counts, got $rows")
+    } finally q2.stop()
+    assert(stateFiles(".changelog") > 0, "run 2 must commit changelogs")
   }
 
   test("merging sessions: two recovered open fragments merge with a post-restart bridge") {

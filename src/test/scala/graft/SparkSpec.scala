@@ -31,17 +31,15 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
+    // The library's own session (state store, local filesystem, changelog
+    // state commits, extensions), so the suites run on what graft ships.
     // local[4, 2]: 4 threads, task maxFailures = 2 — a task that throws
     // retries once before failing the job. Inert for every suite except
     // RetryDeterminismSpec (whose planted first-attempt failures need the
     // retry); suites that assert job failure still fail (the retried
     // attempt throws the same deterministic error).
-    val s = SparkSession.builder().master("local[4, 2]")
+    val s = GraftSession.builder("local[4, 2]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -5,7 +5,9 @@ Usage: tools/sweep_ratio.py <base.json> <probe.json> [data_ratio]
 
 Prints queries sorted by wall ratio (probe/base), flagging anything whose
 ratio exceeds the data ratio (default 3.33 for sf30->sf100) by more than
-1.5x as SUPERLINEAR, and -1.0 entries as FAIL.
+1.5x as SUPERLINEAR, and failed queries as FAIL: those named in the
+archive's `failed` list (their entry is the wall spent before failing), or
+the -1.0 entries of archives written before that list existed.
 """
 import json, sys
 
@@ -13,12 +15,14 @@ base_f, probe_f = sys.argv[1], sys.argv[2]
 data_ratio = float(sys.argv[3]) if len(sys.argv) > 3 else 10.0 / 3.0
 
 base = json.load(open(base_f))["queries"]
-probe = json.load(open(probe_f))["queries"]
+probe_doc = json.load(open(probe_f))
+probe = probe_doc["queries"]
+failed = set(probe_doc.get("failed", []))
 
 rows, fails = [], []
 for q, p in probe.items():
     b = base.get(q)
-    if p < 0:
+    if p < 0 or q in failed:
         fails.append(q)
         continue
     if b is None or b <= 0:
@@ -33,7 +37,7 @@ for r, q, b, p in rows[:40]:
     bs = f"{b:8.1f}" if b is not None else "     n/a"
     print(f"{q:32s} {bs} {p:9.1f} {r:6.2f}  {flag}")
 for q in fails:
-    print(f"{q:32s} FAILED (-1.0)")
+    print(f"{q:32s} FAILED ({probe[q]:.1f})")
 n_super = sum(1 for r, *_ in rows if r > data_ratio * 1.5)
 print(f"\n{len(probe)} queries: {len(fails)} failed, {n_super} superlinear "
       f"(> {data_ratio * 1.5:.2f}x for {data_ratio:.2f}x data), "
