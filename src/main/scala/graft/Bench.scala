@@ -42,23 +42,11 @@ object Bench {
     }
     val verbose = sys.env.getOrElse("SPARK_GRAFT_BENCH_VERBOSE", "0") == "1"
 
-    // Between-queries settle (opt-in probe): blocking-unpersist blocks a
-    // PRIOR query's cleaner-released checkpoints left behind, BEFORE the
-    // timed region opens — isolates each query's wall from its
-    // predecessor's async cleanup (the in-sweep vs isolated gap class:
-    // q_mp_quantiles 1.15 s in-sweep vs 0.75 s isolated on a clean box).
-    // Queries are self-contained (no state is reused across runs by
-    // design), so dropping unreferenced blocks cannot change any result.
-    val settle = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE", "0") == "1"
-
     // One timed run: (wall seconds, succeeded). A failed run keeps the
     // wall it spent before failing, so a failure never makes the sweep
     // read faster; the query is named in the artifact's `failed` list.
     def execute(name: String): (Double, Boolean) = {
       ensureAlive()
-      if (settle)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
       val gc0 = gcMillis
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
@@ -148,12 +136,18 @@ object Bench {
     // during drift adjudication); loadavg_warmed is sampled again after
     // the warmup pass, immediately before the timed runs.
     val loadStart = loadavg
-    // warmup: one pass at the smallest SF primes codegen/JIT per query shape
+    // warmup: one pass at the smallest SF primes codegen/JIT per query
+    // shape; a query failing here is named in both JSON lines
+    // (`warmup_failed`), never silently skipped
+    val warmupFailed = collection.mutable.ListBuffer.empty[String]
     names.foreach { n =>
       ensureAlive()
       try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $n warm-up failed: ${e.getMessage}")
+        warmupFailed += n
+      }
     }
     val loadWarmed = loadavg
 
@@ -161,7 +155,8 @@ object Bench {
     val results = measured.map { case (n, (sec, _)) => n -> sec }
     val failed = measured.collect { case (n, (_, false)) => n }
     val failedJson = failed.map("\"" + _ + "\"").mkString(
-      ",\"failed_n\":" + failed.size + ",\"failed\":[", ",", "]")
+      ",\"failed_n\":" + failed.size + ",\"failed\":[", ",", "]") +
+      warmupFailed.map("\"" + _ + "\"").mkString(",\"warmup_failed\":[", ",", "]")
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum

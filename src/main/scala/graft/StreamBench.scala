@@ -267,7 +267,7 @@ object StreamBench {
     }
 
     // ---- composite trigger: MANY live windows per key ----------------------
-    // The CompositeTriggerProcessor regime none of the arms above exercise:
+    // The composite-trigger regime none of the arms above exercise:
     // `liveWindows` fixed windows per key held open SIMULTANEOUSLY for the
     // whole run (the watermark lags by liveWindows*winMs), early panes
     // firing every perWin rows (Repeatedly(AfterCount) under

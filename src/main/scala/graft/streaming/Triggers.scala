@@ -1,6 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{agnosticEncoderFor, EncoderField, ProductEncoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.types.Metadata
+
+import scala.reflect.ClassTag
 import org.apache.spark.sql.streaming._
 
 import graft.functions.CombineFn
@@ -21,12 +26,13 @@ import graft.operators.Windows
   * early firings (AfterPane.elementCountAtLeast), discarding-mode per-pane
   * deltas, and ClosingBehavior/OnTimeBehavior control.
   *
-  * Execution shape: elements are window-assigned up front (Beam assigns
-  * windows eagerly too — WindowedValue carries them), then keyed by
-  * (userKey, windowStart) so per-(key, window) state matches Beam's state
-  * namespaces (RCORE/StateNamespaces.java). Two event-time timers per
-  * window: end-of-window (ON_TIME firing) and end + allowedLateness (final
-  * firing + state GC).
+  * Execution shape: one pane processor ([[PaneProcessor]]) runs every
+  * window and trigger path. Non-merging windows are assigned up front
+  * (Beam assigns windows eagerly too — WindowedValue carries them) and
+  * keyed by (userKey, windowStart), so per-(key, window) state matches
+  * Beam's state namespaces (RCORE/StateNamespaces.java); merging windows
+  * are keyed by userKey. Two event-time timers per window: end-of-window
+  * (ON_TIME firing) and end + allowedLateness (final firing + state GC).
   */
 object Triggers {
 
@@ -42,32 +48,36 @@ object Triggers {
   /** AfterPane.elementCountAtLeast(n). */
   final case class AfterCount(n: Int) extends EarlyFiring
 
+  /** Shorthand for AfterWatermark with optional early firings and per-batch
+    * late refinements; see [[trigger]]. */
   final case class TriggerConfig(
       windowSizeMs: Long,
       allowedLatenessMs: Long = 0L,
       early: EarlyFiring = NoEarlyFiring,
-      /** fire a pane per micro-batch for late (post-on-time) input */
-      lateFirings: Boolean = true,
       /** ACCUMULATING vs DISCARDING fired panes (WindowingStrategy.java:50) */
       accumulating: Boolean = true,
-      /** OnTimeBehavior.FIRE_ALWAYS: emit the on-time pane even when empty
-        * (WindowingStrategy.java:106) */
-      onTimeAlways: Boolean = true,
       /** Variable-length calendar windows (reference: CalendarWindows
         * .java:96/:198/:314) — full multi-unit + time-zone config
         * ([[graft.operators.Windows.CalendarWindows]]); window boundaries
         * come from the shared grid math in Windows, ignoring
         * windowSizeMs. Assign with [[assignCalendarWindows]]. */
-      calendar: Option[Windows.CalendarWindows] = None)
+      calendar: Option[Windows.CalendarWindows] = None) {
 
-  /** End of the window starting at `startMs` under `cfg` (fixed span or
-    * calendar grid — months/years vary in length; DST makes even day
-    * windows variable in the configured zone). */
-  private[streaming] def windowEndOf(cfg: TriggerConfig, startMs: Long): Long =
-    cfg.calendar match {
-      case None     => startMs + cfg.windowSizeMs
+    /** The composite trigger this config lowers to. */
+    def trigger: TriggerAst = AfterWatermarkEL(early match {
+      case NoEarlyFiring => None
+      case EveryBatch    => Some(AfterCountT(1)) // a batch with input adds >= 1
+      case AfterCount(n) => Some(AfterCountT(n))
+    }, None)
+
+    /** End of the window starting at `startMs` (fixed span or calendar
+      * grid — months/years vary in length; DST makes even day windows
+      * variable in the configured zone). */
+    def windowEnd(startMs: Long): Long = calendar match {
+      case None     => startMs + windowSizeMs
       case Some(cw) => Windows.calendarWindowEndMs(cw, startMs)
     }
+  }
 
   /** Calendar-window assignment: wstart from the shared anchored-grid
     * math ([[graft.operators.Windows.calendarWindowStartMs]] — same
@@ -85,123 +95,16 @@ object Triggers {
 
   private val ON_TIME = "ON_TIME"; private val EARLY = "EARLY"; private val LATE = "LATE"
 
-  /** The ReduceFnRunner analogue for one (key, window). */
-  private class TriggerProcessor[K, V, ACC, OUT](
-      fn: CombineFn[V, ACC, OUT], cfg: TriggerConfig)(
-      implicit accEnc: Encoder[ACC], outEnc: Encoder[Pane[K, OUT]])
-      extends StatefulProcessor[(K, Long), (K, Long, V), Pane[K, OUT]] {
-
-    @transient private var acc: ValueState[ACC] = _
-    @transient private var paneIndex: ValueState[Int] = _
-    @transient private var sinceLastFire: ValueState[Long] = _
-    @transient private var timersSet: ValueState[Boolean] = _
-    @transient private var onTimeDone: ValueState[Boolean] = _
-
-    override def init(om: OutputMode, tm: TimeMode): Unit = {
-      acc = getHandle.getValueState[ACC]("acc", accEnc, TTLConfig.NONE)
-      paneIndex = getHandle.getValueState[Int]("paneIndex", Encoders.scalaInt, TTLConfig.NONE)
-      sinceLastFire = getHandle.getValueState[Long]("sinceLastFire", Encoders.scalaLong, TTLConfig.NONE)
-      timersSet = getHandle.getValueState[Boolean]("timersSet", Encoders.scalaBoolean, TTLConfig.NONE)
-      onTimeDone = getHandle.getValueState[Boolean]("onTimeDone", Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-
-    private def windowEnd(wstart: Long): Long = windowEndOf(cfg, wstart)
-    private def gcTime(wstart: Long): Long = windowEnd(wstart) + cfg.allowedLatenessMs
-    private def onTimeFired: Boolean = onTimeDone.exists() && onTimeDone.get()
-
-    private def fire(key: (K, Long), timing: String, isFinal: Boolean): Iterator[Pane[K, OUT]] = {
-      val idx = if (paneIndex.exists()) paneIndex.get() else 0
-      val a = if (acc.exists()) acc.get() else fn.createAccumulator()
-      paneIndex.update(idx + 1)
-      sinceLastFire.update(0L)
-      if (timing == ON_TIME) onTimeDone.update(true)
-      if (!cfg.accumulating) acc.update(fn.createAccumulator()) // discarding: emit delta
-      Iterator((key._1, key._2, windowEnd(key._2), fn.extractOutput(a), idx, timing, isFinal))
-    }
-
-    override def handleInputRows(key: (K, Long), rows: Iterator[(K, Long, V)],
-                                 tv: TimerValues): Iterator[Pane[K, OUT]] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      // too-late data: beyond GC horizon → dropped
-      // (reference: RCORE/LateDataDroppingDoFnRunner.java)
-      if (wm >= gcTime(key._2)) return Iterator.empty
-
-      var a = if (acc.exists()) acc.get() else fn.createAccumulator()
-      var n = if (sinceLastFire.exists()) sinceLastFire.get() else 0L
-      var count = 0L
-      rows.foreach { r => a = fn.addInput(a, r._3); count += 1 }
-      acc.update(a); n += count; sinceLastFire.update(n)
-
-      if (!(if (timersSet.exists()) timersSet.get() else false)) {
-        getHandle.registerTimer(windowEnd(key._2))
-        if (cfg.allowedLatenessMs > 0) getHandle.registerTimer(gcTime(key._2))
-        timersSet.update(true)
-      }
-
-      if (wm >= windowEnd(key._2)) {
-        // input after the watermark passed end-of-window. The FIRST
-        // post-watermark pane is the ON_TIME pane even when input and the
-        // end-of-window timer land in the same micro-batch (PaneInfo's
-        // ordering contract: ON_TIME precedes every LATE pane). This branch
-        // implies allowedLateness > 0 — with zero lateness gcTime ==
-        // windowEnd and the gate above already dropped the input — so a
-        // non-final pane is always correct here (the GC timer emits the
-        // final one).
-        if (cfg.lateFirings && count > 0)
-          fire(key, if (onTimeFired) LATE else ON_TIME, isFinal = false)
-        else Iterator.empty
-      } else cfg.early match {
-        case EveryBatch if count > 0          => fire(key, EARLY, isFinal = false)
-        case AfterCount(k) if n >= k          => fire(key, EARLY, isFinal = false)
-        case _                                => Iterator.empty
-      }
-    }
-
-    override def handleExpiredTimer(key: (K, Long), tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Pane[K, OUT]] = {
-      val expiry = info.getExpiryTimeInMs()
-      if (expiry == windowEnd(key._2)) {
-        val isFinal = cfg.allowedLatenessMs == 0
-        val pending = if (sinceLastFire.exists()) sinceLastFire.get() else 0L
-        val out =
-          if (onTimeFired) {
-            // the ON_TIME pane already went out with same-batch input;
-            // the timer only flushes data that arrived since
-            if (pending > 0) fire(key, LATE, isFinal) else Iterator.empty[Pane[K, OUT]]
-          } else if (cfg.onTimeAlways || pending > 0) fire(key, ON_TIME, isFinal)
-          else Iterator.empty[Pane[K, OUT]]
-        if (isFinal) clearAll()
-        out
-      } else {
-        // GC timer: final pane only if data arrived since the last firing
-        // (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105)
-        val pending = if (sinceLastFire.exists()) sinceLastFire.get() else 0L
-        val out =
-          if (pending > 0) fire(key, LATE, isFinal = true)
-          else Iterator.empty[Pane[K, OUT]]
-        clearAll()
-        out
-      }
-    }
-
-    private def clearAll(): Unit = {
-      acc.clear(); paneIndex.clear(); sinceLastFire.clear(); timersSet.clear()
-      onTimeDone.clear()
-    }
-  }
-
   /** Triggered fixed-window aggregation with pane metadata. `assigned` must
     * be (key, windowStartMs, value) with a watermark declared upstream
     * (use [[assignFixedWindows]]). */
   def triggeredAggregate[K, V, ACC, OUT](
       assigned: Dataset[(K, Long, V)], fn: CombineFn[V, ACC, OUT], cfg: TriggerConfig)(
       implicit kEnc: Encoder[(K, Long)], accEnc: Encoder[ACC],
-      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
-    Stateful.requireRocksDBStateStore(assigned.sparkSession)
-    assigned.groupByKey(r => (r._1, r._2))
-      .transformWithState(new TriggerProcessor[K, V, ACC, OUT](fn, cfg),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] =
+    paneAggregate(assigned)(r => (r._1, r._2), (g: (K, Long)) => g._1,
+      (ws: Long, _: V) => (ws, cfg.windowEnd(ws)), fn, cfg.trigger, cfg.allowedLatenessMs,
+      cfg.accumulating)(kEnc, windowEncoder(accEnc), outEnc)
 
   /** Fixed-window assignment (FixedWindows.java:36): wstart =
     * floor(ts / size) * size, carried next to the key — Beam's eager window
@@ -350,6 +253,17 @@ object Triggers {
       * 2 = the "watermark fired" marker pseudo-child. */
     private def effLate(l: Option[TriggerAst]): TriggerAst = l.getOrElse(AfterCountT(1))
 
+    /** A node's AST children with their path slots. */
+    private def children(t: TriggerAst): Seq[(TriggerAst, Int)] = t match {
+      case AfterFirstT(cs)        => cs.zipWithIndex
+      case AfterAllT(cs)          => cs.zipWithIndex
+      case AfterEachT(cs)         => cs.zipWithIndex
+      case RepeatedlyT(ch)        => Seq(ch -> 0)
+      case OrFinallyT(m, u)       => Seq(m -> 0, u -> 1)
+      case AfterWatermarkEL(e, l) => e.map(_ -> 0).toSeq :+ (effLate(l) -> 1)
+      case _                      => Nil
+    }
+
     def addElements(t: TriggerAst, path: String, st: TrigState, n: Long,
                     nowProcMs: Long): Unit = {
       val (c, f, d) = entry(path, st)
@@ -361,19 +275,7 @@ object Triggers {
         case _ => d
       }
       st(path) = (c + n, f, armed)
-      t match {
-        case AfterFirstT(cs) => cs.zipWithIndex.foreach { case (ch, i) => addElements(ch, childPath(path, i), st, n, nowProcMs) }
-        case AfterAllT(cs)   => cs.zipWithIndex.foreach { case (ch, i) => addElements(ch, childPath(path, i), st, n, nowProcMs) }
-        case AfterEachT(cs)  => cs.zipWithIndex.foreach { case (ch, i) => addElements(ch, childPath(path, i), st, n, nowProcMs) }
-        case RepeatedlyT(ch) => addElements(ch, childPath(path, 0), st, n, nowProcMs)
-        case OrFinallyT(m, u) =>
-          addElements(m, childPath(path, 0), st, n, nowProcMs)
-          addElements(u, childPath(path, 1), st, n, nowProcMs)
-        case AfterWatermarkEL(e, l) =>
-          e.foreach(ch => addElements(ch, childPath(path, 0), st, n, nowProcMs))
-          addElements(effLate(l), childPath(path, 1), st, n, nowProcMs)
-        case _ => ()
-      }
+      children(t).foreach { case (ch, i) => addElements(ch, childPath(path, i), st, n, nowProcMs) }
     }
 
     def finished(path: String, st: TrigState): Boolean = entry(path, st)._2
@@ -457,18 +359,8 @@ object Triggers {
 
     def reset(t: TriggerAst, path: String, st: TrigState): Unit = {
       st(path) = NONE
-      t match {
-        case AfterFirstT(cs) => cs.zipWithIndex.foreach { case (ch, i) => reset(ch, childPath(path, i), st) }
-        case AfterAllT(cs)   => cs.zipWithIndex.foreach { case (ch, i) => reset(ch, childPath(path, i), st) }
-        case AfterEachT(cs)  => cs.zipWithIndex.foreach { case (ch, i) => reset(ch, childPath(path, i), st) }
-        case RepeatedlyT(ch) => reset(ch, childPath(path, 0), st)
-        case OrFinallyT(m, u) => reset(m, childPath(path, 0), st); reset(u, childPath(path, 1), st)
-        case AfterWatermarkEL(e, l) =>
-          e.foreach(ch => reset(ch, childPath(path, 0), st))
-          reset(effLate(l), childPath(path, 1), st)
-          st(childPath(path, 2)) = NONE
-        case _ => ()
-      }
+      children(t).foreach { case (ch, i) => reset(ch, childPath(path, i), st) }
+      if (t.isInstanceOf[AfterWatermarkEL]) st(childPath(path, 2)) = NONE
     }
 
     /** Merge trigger state across merging windows (the reference's
@@ -479,374 +371,241 @@ object Triggers {
       * late-firing mode, matching MergingActiveWindowSet's
       * EOW-already-fired handling), processing-time deadlines take the
       * earliest armed value. */
-    def merge(a: List[(String, Long, Boolean, Long)],
-              b: List[(String, Long, Boolean, Long)]): List[(String, Long, Boolean, Long)] = {
-      val m = collection.mutable.Map.empty[String, (Long, Boolean, Long)]
-      (a ++ b).foreach { case (p, c, f, d) =>
-        val (c0, f0, d0) = m.getOrElse(p, NONE)
-        m(p) = (c0 + c, f0 || f, math.min(d0, d))
+    def merge(into: TrigState, from: TrigState): Unit =
+      from.foreach { case (p, (c, f, d)) =>
+        val (c0, f0, d0) = entry(p, into)
+        into(p) = (c0 + c, f0 || f, math.min(d0, d))
       }
-      m.toList.map { case (p, (c, f, d)) => (p, c, f, d) }
-    }
-  }
-
-  /** ReduceFnRunner with a composite trigger. Fires whenever the root
-    * trigger says so; a finished root emits its pane as FINAL and GCs the
-    * window. Timing labels: EARLY before the watermark passes end-of-window,
-    * ON_TIME for the first at/after, LATE subsequently. */
-  private class CompositeTriggerProcessor[K, V, ACC, OUT](
-      fn: CombineFn[V, ACC, OUT], trigger: TriggerAst,
-      windowSizeMs: Long, allowedLatenessMs: Long, accumulating: Boolean)(
-      implicit accEnc: Encoder[ACC], outEnc: Encoder[Pane[K, OUT]])
-      extends StatefulProcessor[(K, Long), (K, Long, V), Pane[K, OUT]] {
-
-    @transient private var acc: ValueState[ACC] = _
-    @transient private var paneIndex: ValueState[Int] = _
-    @transient private var trigState: ValueState[List[(String, Long, Boolean, Long)]] = _
-    @transient private var onTimeDone: ValueState[Boolean] = _
-    @transient private var timersSet: ValueState[Boolean] = _
-    @transient private var sinceFire: ValueState[Long] = _
-    /** Set when the root trigger finished before the GC horizon: the window
-      * is CLOSED — later data is dropped (droppedDueToClosedWindow), never
-      * re-aggregated into a fresh accumulator. Cleared by the GC timer. */
-    @transient private var closed: ValueState[Boolean] = _
-
-    override def init(om: OutputMode, tm: TimeMode): Unit = {
-      acc = getHandle.getValueState[ACC]("acc", accEnc, TTLConfig.NONE)
-      paneIndex = getHandle.getValueState[Int]("paneIndex", Encoders.scalaInt, TTLConfig.NONE)
-      trigState = getHandle.getValueState[List[(String, Long, Boolean, Long)]]("trig",
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[(String, Long, Boolean, Long)]](),
-        TTLConfig.NONE)
-      onTimeDone = getHandle.getValueState[Boolean]("onTimeDone", Encoders.scalaBoolean, TTLConfig.NONE)
-      timersSet = getHandle.getValueState[Boolean]("timersSet", Encoders.scalaBoolean, TTLConfig.NONE)
-      sinceFire = getHandle.getValueState[Long]("sinceFire", Encoders.scalaLong, TTLConfig.NONE)
-      closed = getHandle.getValueState[Boolean]("closed", Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-
-    private def windowEnd(ws: Long) = ws + windowSizeMs
-    private def gcTime(ws: Long) = windowEnd(ws) + allowedLatenessMs
-
-    private def loadTrig(): TrigState = {
-      val m = collection.mutable.Map.empty[String, (Long, Boolean, Long)]
-      if (trigState.exists()) trigState.get().foreach { case (p, c, f, d) => m(p) = (c, f, d) }
-      m
-    }
-    private def saveTrig(st: TrigState): Unit =
-      trigState.update(st.toList.map { case (p, (c, f, d)) => (p, c, f, d) })
 
     /** Any unfinished node holding an armed processing-time deadline? */
-    private def armedDeadline(st: TrigState): Boolean =
+    def armedDeadline(st: TrigState): Boolean =
       st.valuesIterator.exists { case (_, f, d) => !f && d != Long.MaxValue }
-
-    /** Quiescent-key catch-up (Beam's runner-scheduled proc-time timers,
-      * RCORE/triggers/AfterProcessingTimeStateMachine.java: an idle key
-      * still wakes when its deadline passes): while a proc-time deadline is
-      * armed, keep an event-time timer registered just past the current
-      * watermark. ANY later batch — data for other keys included — advances
-      * the watermark, fires the timer, and re-evaluates this key against
-      * the proc-time clock; if the deadline still hasn't passed, the
-      * handler re-registers. Cost: one timer wake per armed key per
-      * watermark advance, the same cadence Beam's proc-time timers exhibit
-      * under a micro-batch runner. */
-    private def armCatchupTimer(key: (K, Long), wm: Long): Unit =
-      if (trigState.exists() && armedDeadline(loadTrig()) && wm + 1 < windowEnd(key._2))
-        getHandle.registerTimer(wm + 1)
-
-    private def fire(key: (K, Long), wmPastEnd: Boolean, isFinal: Boolean): Pane[K, OUT] = {
-      val idx = if (paneIndex.exists()) paneIndex.get() else 0
-      val a = if (acc.exists()) acc.get() else fn.createAccumulator()
-      paneIndex.update(idx + 1)
-      sinceFire.update(0L)
-      if (!accumulating) acc.update(fn.createAccumulator())
-      val timing =
-        if (!wmPastEnd) "EARLY"
-        else if (!(if (onTimeDone.exists()) onTimeDone.get() else false)) { onTimeDone.update(true); "ON_TIME" }
-        else "LATE"
-      (key._1, key._2, windowEnd(key._2), fn.extractOutput(a), idx, timing, isFinal)
-    }
-
-    private def evalAndFire(key: (K, Long), wm: Long, nowProcMs: Long): Iterator[Pane[K, OUT]] = {
-      val st = loadTrig()
-      val wmPastEnd = wm >= windowEnd(key._2)
-      val ctx = TrigCtx(wmPastEnd, nowProcMs)
-      var out = List.empty[Pane[K, OUT]]
-      if (TriggerEval.shouldFire(trigger, "r", st, ctx)) {
-        TriggerEval.onFire(trigger, "r", st, ctx)
-        val rootDone = TriggerEval.finished("r", st)
-        out = fire(key, wmPastEnd, isFinal = rootDone) :: out
-        if (rootDone) {
-          // early closure: drop the aggregate state but leave a closed
-          // marker until the GC horizon, so later same-window data is
-          // DROPPED — without it the data would reopen the window with a
-          // fresh accumulator and emit a second "final" pane
-          clearAll()
-          closed.update(true)
-          return out.reverseIterator
-        }
-      }
-      saveTrig(st)
-      out.reverseIterator
-    }
-
-    override def handleInputRows(key: (K, Long), rows: Iterator[(K, Long, V)],
-                                 tv: TimerValues): Iterator[Pane[K, OUT]] = {
-      val wm = tv.getCurrentWatermarkInMs()
-      if (wm >= gcTime(key._2)) return Iterator.empty // too late
-      if (closed.exists() && closed.get()) return Iterator.empty // closed window
-      var a = if (acc.exists()) acc.get() else fn.createAccumulator()
-      var n = 0L
-      rows.foreach { r => a = fn.addInput(a, r._3); n += 1 }
-      acc.update(a)
-      sinceFire.update((if (sinceFire.exists()) sinceFire.get() else 0L) + n)
-      val st = loadTrig()
-      TriggerEval.addElements(trigger, "r", st, n, tv.getCurrentProcessingTimeInMs())
-      saveTrig(st)
-      if (!(if (timersSet.exists()) timersSet.get() else false)) {
-        getHandle.registerTimer(windowEnd(key._2))
-        getHandle.registerTimer(gcTime(key._2))
-        timersSet.update(true)
-      }
-      val out = evalAndFire(key, wm, tv.getCurrentProcessingTimeInMs())
-      armCatchupTimer(key, wm)
-      out
-    }
-
-    override def handleExpiredTimer(key: (K, Long), tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Pane[K, OUT]] = {
-      if (closed.exists() && closed.get()) {
-        // closed window tombstone: drop it for good at the GC horizon
-        if (info.getExpiryTimeInMs() >= gcTime(key._2)) closed.clear()
-        return Iterator.empty
-      }
-      if (!acc.exists() && !trigState.exists()) return Iterator.empty // already gone
-      // GC first: with allowedLateness=0 the end-of-window timer IS the GC
-      // timer (same timestamp, Spark dedups) — window expiry wins
-      if (info.getExpiryTimeInMs() >= gcTime(key._2)) {
-        // Window expiry. Final pane fires when:
-        //  - the trigger itself would fire and its on-time pane has not
-        //    fired yet (e.g. orFinally's AfterWatermark until-clause when
-        //    allowedLateness=0 folds end-of-window into GC), or
-        //  - data arrived since the last firing
-        //    (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105), or
-        //  - no pane ever fired (every window produces at least one pane).
-        val st = loadTrig()
-        val onTime = onTimeDone.exists() && onTimeDone.get()
-        val trigWants = !onTime && TriggerEval.shouldFire(trigger, "r", st,
-          TrigCtx(wmPastEnd = true, tv.getCurrentProcessingTimeInMs()))
-        val pending = if (sinceFire.exists()) sinceFire.get() else 0L
-        val everFired = paneIndex.exists() && paneIndex.get() > 0
-        val out =
-          if (trigWants || pending > 0 || !everFired)
-            Iterator.single(fire(key, wmPastEnd = true, isFinal = true))
-          else Iterator.empty[Pane[K, OUT]]
-        clearAll()
-        out
-      } else {
-        // end-of-window timer vs proc-time catch-up timer: a catch-up fires
-        // BEFORE end-of-window and must not report wmPastEnd — passing
-        // windowEnd here would fire AfterWatermark children early
-        val expiry = info.getExpiryTimeInMs()
-        val wmNow = tv.getCurrentWatermarkInMs()
-        val wmEff =
-          if (expiry >= windowEnd(key._2)) windowEnd(key._2)
-          else math.min(wmNow, windowEnd(key._2) - 1)
-        val out = evalAndFire(key, wm = wmEff, tv.getCurrentProcessingTimeInMs())
-        if (expiry < windowEnd(key._2)) armCatchupTimer(key, wmNow)
-        out
-      }
-    }
-
-    private def clearAll(): Unit = {
-      acc.clear(); paneIndex.clear(); trigState.clear(); onTimeDone.clear()
-      timersSet.clear(); sinceFire.clear()
-    }
   }
 
-  // --------------------------------------------------------- merging sessions
+  // ----------------------------------------------------------- pane processor
 
-  /** Per-window session state: (end, acc, paneIndex, onTimeFired,
-    * pendingSinceFire, closed, triggerState). */
+  /** Per-window pane state, one MapState record per window keyed by its
+    * start: (end, acc, paneIndex, onTimeFired, pendingSinceFire, closed,
+    * triggerState). */
   type SessionW[ACC] = (Long, ACC, Int, Boolean, Long, Boolean, List[(String, Long, Boolean, Long)])
 
-  /** Session-window pane processor: the reference's merging-window path
-    * (reference: Sessions.java:40, WindowFn.mergeWindows WindowFn.java:82,
-    * RCORE/MergingActiveWindowSet.java; ReduceFnRunner merge handling,
-    * ReduceFnRunner.java:89 onMerge). Spark's built-in `session_window`
-    * covers untriggered sessions; this operator adds what it cannot
-    * express: pane metadata, late-data panes within allowedLateness, merge
-    * of PARTIAL AGGREGATES — each element opens the proto-window its
-    * WindowFn assigns (`assign(ts, value)`; Sessions = [ts, ts+gap)) and any
-    * overlapping active windows merge via CombineFn.mergeAccumulators (the
-    * contract that makes merging windows possible without re-buffering raw
-    * elements) — and the FULL composite-trigger AST: each active window
-    * carries its own trigger state machine, and window merges merge the
-    * trigger state too (TriggerEval.merge — counts add, finished flags OR,
-    * proc-time deadlines take the earliest).
-    *
-    * Per key: MapState windowStart → [[SessionW]]. Timers fire per window
-    * end (ON_TIME) and end+lateness (final + GC); timers orphaned by merges
-    * are ignored (no active window matches). A window whose ROOT trigger
-    * finishes closes early: its aggregate state drops but a closed
-    * tombstone survives to the GC horizon so later data in its span is
-    * dropped (droppedDueToClosedWindow), not merged into a reopened
-    * window. */
-  private class SessionProcessor[K, V, ACC, OUT](
-      fn: CombineFn[V, ACC, OUT], assign: (Long, V) => (Long, Long),
-      allowedLatenessMs: Long,
-      accumulating: Boolean, trigger: TriggerAst)(
-      implicit accEnc: Encoder[SessionW[ACC]],
-      outEnc: Encoder[Pane[K, OUT]])
-      extends StatefulProcessor[K, (K, Long, V), Pane[K, OUT]] {
+  /** [[SessionW]] encoder from the accumulator's. */
+  private def windowEncoder[ACC](accEnc: Encoder[ACC]): Encoder[SessionW[ACC]] = {
+    val fields = Seq[Encoder[_]](Encoders.scalaLong, accEnc, Encoders.scalaInt,
+      Encoders.scalaBoolean, Encoders.scalaLong, Encoders.scalaBoolean,
+      ExpressionEncoder[List[(String, Long, Boolean, Long)]]()).zipWithIndex.map { case (e, i) =>
+      val a = agnosticEncoderFor(e)
+      EncoderField(s"_${i + 1}", a, a.nullable, Metadata.empty)
+    }
+    ProductEncoder(implicitly[ClassTag[SessionW[ACC]]], fields, None)
+  }
 
-    private type W = SessionW[ACC]
-    @transient private var windows: MapState[Long, W] = _
+  /** One window while the processor works on it: the [[SessionW]] fields
+    * as mutable slots, plus the elements added this batch (applied to the
+    * trigger once, after merging; > 0 marks the window touched). */
+  private final class Win[ACC](var end: Long, var acc: ACC, var paneIndex: Int,
+                               var onTime: Boolean, var pending: Long, var closed: Boolean,
+                               val trig: TrigState) {
+    var added = 0L
+    /** end (and GC time) not yet registered as timers */
+    var timersDue = false
+    def this(w: SessionW[ACC]) = this(w._1, w._2, w._3, w._4, w._5, w._6,
+      collection.mutable.Map.from(w._7.map { case (p, c, f, d) => p -> ((c, f, d)) }))
+    def record: SessionW[ACC] = (end, acc, paneIndex, onTime, pending, closed,
+      trig.toList.map { case (p, (c, f, d)) => (p, c, f, d) })
+  }
+
+  /** The ReduceFnRunner analogue (reference: RCORE/ReduceFnRunner.java:89,
+    * merging and non-merging active-window sets) for every window and
+    * trigger path. `assign(ts, value)` is the WindowFn's proto-window
+    * [start, end). Non-merging WindowFns group by (key, windowStart);
+    * merging ones (Sessions.java:40, WindowFn.java:82,
+    * RCORE/MergingActiveWindowSet.java) group by key, and a proto-window
+    * merges with every INTERSECTING active window — abutting half-open
+    * intervals stay separate (MergeOverlappingIntervalWindows.java:37) —
+    * merging partial aggregates (CombineFn.mergeAccumulators), pane
+    * metadata and trigger state (TriggerEval.merge). An element whose
+    * proto-window is an open window folds straight into it with addInput.
+    *
+    * Each window fires whenever its root trigger says so: EARLY before the
+    * watermark passes end-of-window, ON_TIME for the first at/after, LATE
+    * subsequently. A finished root closes the window early: a tombstone
+    * survives to the GC horizon so later data in its span is dropped
+    * (droppedDueToClosedWindow) instead of reopening it. Timers at end
+    * (ON_TIME opportunity) and end + lateness (final pane + GC) are
+    * registered when a window first gets that end; timers orphaned by
+    * merges match no window and are ignored. */
+  private class PaneProcessor[G, K, V, ACC, OUT](
+      fn: CombineFn[V, ACC, OUT], trigger: TriggerAst, allowedLatenessMs: Long,
+      accumulating: Boolean, userKey: G => K, assign: (Long, V) => (Long, Long))(
+      implicit wEnc: Encoder[SessionW[ACC]], outEnc: Encoder[Pane[K, OUT]])
+      extends StatefulProcessor[G, (K, Long, V), Pane[K, OUT]] {
+
+    @transient private var windows: MapState[Long, SessionW[ACC]] = _
 
     override def init(om: OutputMode, tm: TimeMode): Unit =
-      windows = getHandle.getMapState[Long, W](
-        "sessions", Encoders.scalaLong, accEnc, TTLConfig.NONE)
+      windows = getHandle.getMapState[Long, SessionW[ACC]](
+        "windows", Encoders.scalaLong, wEnc, TTLConfig.NONE)
 
-    private def fireFrom(key: K, start: Long, w: W, timing: String,
-                         isFinal: Boolean): (Pane[K, OUT], W) = {
-      val out = (key, start, w._1, fn.extractOutput(w._2), w._3, timing, isFinal)
-      val nextAcc = if (accumulating) w._2 else fn.createAccumulator()
-      (out, (w._1, nextAcc, w._3 + 1, timing != EARLY || w._4, 0L, w._6, w._7))
+    private def gcTime(end: Long): Long = end + allowedLatenessMs
+
+    private def fire(key: K, start: Long, w: Win[ACC], wmPastEnd: Boolean,
+                     isFinal: Boolean): Pane[K, OUT] = {
+      val timing = if (!wmPastEnd) EARLY else if (!w.onTime) ON_TIME else LATE
+      val pane = (key, start, w.end, fn.extractOutput(w.acc), w.paneIndex, timing, isFinal)
+      w.paneIndex += 1; w.pending = 0L; w.onTime ||= timing != EARLY
+      if (!accumulating) w.acc = fn.createAccumulator() // discarding: emit delta
+      pane
     }
 
-    private def loadTrig(w: W): TrigState = {
-      val m = collection.mutable.Map.empty[String, (Long, Boolean, Long)]
-      w._7.foreach { case (p, c, f, d) => m(p) = (c, f, d) }
-      m
+    private def evalAndFire(key: K, start: Long, w: Win[ACC], wmPastEnd: Boolean,
+                            nowProcMs: Long): Option[Pane[K, OUT]] = {
+      val ctx = TrigCtx(wmPastEnd, nowProcMs)
+      if (!TriggerEval.shouldFire(trigger, "r", w.trig, ctx)) None
+      else {
+        TriggerEval.onFire(trigger, "r", w.trig, ctx)
+        val rootDone = TriggerEval.finished("r", w.trig)
+        val pane = fire(key, start, w, wmPastEnd, isFinal = rootDone)
+        if (rootDone) {
+          // early closure: tombstone until the GC horizon (see class doc)
+          w.acc = fn.createAccumulator(); w.closed = true; w.trig.clear()
+        }
+        Some(pane)
+      }
     }
-    private def withTrig(w: W, st: TrigState): W =
-      (w._1, w._2, w._3, w._4, w._5, w._6,
-        st.toList.map { case (p, (c, f, d)) => (p, c, f, d) })
 
-    override def handleInputRows(key: K, rows: Iterator[(K, Long, V)],
+    /** The quiescent-key CATCH-UP timer ([[AfterProcessingTimeT]] in the
+      * [[TriggerAst]] doc; Beam's runner-scheduled proc-time timers,
+      * RCORE/triggers/AfterProcessingTimeStateMachine.java): one timer wake
+      * per armed key per watermark advance. */
+    private def armCatchupTimer(wm: Long, ws: Iterable[Win[ACC]]): Unit =
+      if (ws.exists(w => !w.closed && wm + 1 < w.end && TriggerEval.armedDeadline(w.trig)))
+        getHandle.registerTimer(wm + 1)
+
+    override def handleInputRows(key: G, rows: Iterator[(K, Long, V)],
                                  tv: TimerValues): Iterator[Pane[K, OUT]] = {
       val wm = tv.getCurrentWatermarkInMs()
       val nowProc = tv.getCurrentProcessingTimeInMs()
-      val active = collection.mutable.Map.empty[Long, W]
-      windows.iterator().foreach { p => active(p._1) = p._2 }
-      val touched = collection.mutable.Set.empty[Long]
+      val active = collection.mutable.Map.empty[Long, Win[ACC]]
+      windows.iterator().foreach { case (s, w) => active(s) = new Win(w) }
+      val stored = active.keySet.toSet
       rows.foreach { case (_, ts, v) =>
         // WindowFn.assignWindows: the proto-window is element-driven (value
         // AND timestamp — Beam's AssignContext exposes both); Sessions is
         // (ts, ts + gap), a dynamic-gap WindowFn reads the gap off `v`
-        val (wStart0, end) = assign(ts, v)
-        require(wStart0 < end, s"assign produced empty window [$wStart0, $end)")
-        if (wm < end + allowedLatenessMs) { // not too late
-          // merge every INTERSECTING active window - abutting half-open
-          // intervals stay separate (Beam IntervalWindow.intersects;
-          // MergeOverlappingIntervalWindows.java:37;
-          // MergingActiveWindowSet.mergeIfAppropriate)
-          val overlapping = active.filter { case (s, w) => s < end && wStart0 < w._1 }
-          if (overlapping.exists(_._2._6)) {
-            // the element's span touches a CLOSED window (root trigger
-            // finished): Beam drops such elements
-            // (droppedDueToClosedWindow) rather than reopening or
-            // extending the window
-          } else {
-            var start = wStart0
-            var acc = fn.addInput(fn.createAccumulator(), v)
-            var newEnd = end
-            var paneIdx = 0
-            var fired = false
-            var pending = 1L
-            var trig = List.empty[(String, Long, Boolean, Long)]
-            overlapping.foreach { case (s, (e, a, pi, f, pd, _, tg)) =>
-              start = math.min(start, s); newEnd = math.max(newEnd, e)
-              acc = fn.mergeAccumulators(a, acc)
-              paneIdx = math.max(paneIdx, pi); fired = fired || f; pending += pd
-              trig = TriggerEval.merge(trig, tg)
-              active.remove(s); touched -= s
+        val (ps, pe) = assign(ts, v)
+        require(ps < pe, s"assign produced empty window [$ps, $pe)")
+        // too-late data: beyond the GC horizon → dropped
+        // (reference: RCORE/LateDataDroppingDoFnRunner.java)
+        if (wm < gcTime(pe)) active.get(ps) match {
+          case Some(w) if w.end == pe && !w.closed =>
+            // the proto-window IS an open window (always, for non-merging
+            // WindowFns): active windows are disjoint, so nothing else
+            // intersects it
+            w.acc = fn.addInput(w.acc, v); w.pending += 1; w.added += 1
+          case _ =>
+            val overlapping = active.filter { case (s, w) => s < pe && ps < w.end }
+            // an element whose span touches a CLOSED window (root trigger
+            // finished) is dropped (droppedDueToClosedWindow), never
+            // reopening or extending the window
+            if (!overlapping.valuesIterator.exists(_.closed)) {
+              val w = new Win[ACC](pe, fn.addInput(fn.createAccumulator(), v), 0, false, 1L,
+                false, collection.mutable.Map.empty)
+              w.added = 1L
+              var start = ps
+              overlapping.foreach { case (s, o) =>
+                start = math.min(start, s); w.end = math.max(w.end, o.end)
+                w.acc = fn.mergeAccumulators(o.acc, w.acc)
+                w.paneIndex = math.max(w.paneIndex, o.paneIndex); w.onTime ||= o.onTime
+                w.pending += o.pending; w.added += o.added
+                TriggerEval.merge(w.trig, o.trig)
+                active.remove(s)
+              }
+              // timers exist already for an end a merged window had
+              w.timersDue = overlapping.valuesIterator.forall(o => o.end != w.end || o.timersDue)
+              active(start) = w
             }
-            val merged: W = (newEnd, acc, paneIdx, fired, pending, false, trig)
-            val st = loadTrig(merged)
-            TriggerEval.addElements(trigger, "r", st, 1L, nowProc)
-            active(start) = withTrig(merged, st)
-            touched += start
-          }
         }
       }
+      val k = userKey(key)
       var out = List.empty[Pane[K, OUT]]
-      windows.clear()
-      touched.foreach { s =>
-        val w = active(s)
-        // the element-acceptance gate guarantees wm < end + lateness for
-        // every touched window, so a touched window is never AT its GC
-        // horizon here — the GC timer owns final flushing
-        val wmPastEnd = wm >= w._1
-        val st = loadTrig(w)
-        val ctx = TrigCtx(wmPastEnd, nowProc)
-        if (TriggerEval.shouldFire(trigger, "r", st, ctx)) {
-          TriggerEval.onFire(trigger, "r", st, ctx)
-          val rootDone = TriggerEval.finished("r", st)
-          // with zero allowed lateness a post-watermark pane is also the
-          // window's last (the same-batch/next timer GCs silently)
-          val isFinal = rootDone || (wmPastEnd && allowedLatenessMs == 0)
-          val timing = if (!wmPastEnd) EARLY else if (!w._4) ON_TIME else LATE
-          val (pane, next) = fireFrom(key, s, withTrig(w, st), timing, isFinal)
-          out = pane :: out
-          if (rootDone) {
-            // early closure: tombstone until GC (see class doc)
-            active(s) = (next._1, fn.createAccumulator(), next._3, next._4,
-              0L, true, Nil)
-          } else active(s) = next
-        } else active(s) = withTrig(w, st)
-        active.get(s).foreach { w2 =>
-          getHandle.registerTimer(w2._1)
-          if (allowedLatenessMs > 0) getHandle.registerTimer(w2._1 + allowedLatenessMs)
+      active.foreach { case (s, w) =>
+        if (w.added > 0) { // touched this batch
+          // the element-acceptance gate guarantees wm < end + lateness for
+          // every touched window, so a touched window is never AT its GC
+          // horizon here — the GC timer owns final flushing
+          TriggerEval.addElements(trigger, "r", w.trig, w.added, nowProc)
+          evalAndFire(k, s, w, wmPastEnd = wm >= w.end, nowProc).foreach(p => out = p :: out)
+          if (w.timersDue) {
+            getHandle.registerTimer(w.end)
+            if (allowedLatenessMs > 0) getHandle.registerTimer(gcTime(w.end))
+          }
+          windows.updateValue(s, w.record)
         }
       }
-      active.foreach { case (s, w) => windows.updateValue(s, w) }
+      stored.foreach(s => if (!active.contains(s)) windows.removeKey(s)) // merged away
+      armCatchupTimer(wm, active.values)
       out.reverseIterator
     }
 
-    override def handleExpiredTimer(key: K, tv: TimerValues,
+    override def handleExpiredTimer(key: G, tv: TimerValues,
                                     info: ExpiredTimerInfo): Iterator[Pane[K, OUT]] = {
       val expiry = info.getExpiryTimeInMs()
+      val wmNow = tv.getCurrentWatermarkInMs()
       val nowProc = tv.getCurrentProcessingTimeInMs()
+      val k = userKey(key)
       var out = List.empty[Pane[K, OUT]]
-      windows.iterator().toList.foreach { case (s, w) =>
-        if (w._1 + allowedLatenessMs == expiry || (allowedLatenessMs == 0 && w._1 == expiry)) {
-          // GC horizon. Closed tombstones just evaporate; open windows
-          // flush a final pane when the trigger still wants to fire
-          // (on-time never happened), data is pending since the last
-          // firing (ClosingBehavior.FIRE_IF_NON_EMPTY), or no pane ever
-          // fired
-          if (!w._6) {
-            val st = loadTrig(w)
-            val trigWants = !w._4 && TriggerEval.shouldFire(trigger, "r", st,
+      val open = collection.mutable.ListBuffer.empty[Win[ACC]]
+      windows.iterator().toList.foreach { case (s, rec) =>
+        if (expiry >= gcTime(rec._1)) {
+          // GC horizon (with zero lateness the end-of-window timer IS the
+          // GC timer). Closed tombstones just evaporate; open windows flush
+          // a final pane when:
+          //  - the trigger itself would fire and its on-time pane has not
+          //    fired yet (e.g. orFinally's AfterWatermark until-clause when
+          //    allowedLateness=0 folds end-of-window into GC), or
+          //  - data arrived since the last firing
+          //    (ClosingBehavior.FIRE_IF_NON_EMPTY, WindowingStrategy.java:105), or
+          //  - no pane ever fired (every window produces at least one pane).
+          if (!rec._6) {
+            val w = new Win(rec)
+            val trigWants = !w.onTime && TriggerEval.shouldFire(trigger, "r", w.trig,
               TrigCtx(wmPastEnd = true, nowProc))
-            if (trigWants || w._5 > 0 || w._3 == 0) {
-              val (pane, _) = fireFrom(key, s, w, if (w._4) LATE else ON_TIME, isFinal = true)
-              out = pane :: out
-            }
+            if (trigWants || w.pending > 0 || w.paneIndex == 0)
+              out = fire(k, s, w, wmPastEnd = true, isFinal = true) :: out
           }
           windows.removeKey(s)
-        } else if (w._1 == expiry && !w._6) {
-          // end-of-window with allowedLateness > 0 (when lateness == 0 the
-          // GC branch above matched this same expiry): evaluate the trigger
-          // with the watermark past the end — the ON_TIME opportunity;
-          // composite roots may also finish here
-          val st = loadTrig(w)
-          val ctx = TrigCtx(wmPastEnd = true, nowProc)
-          if (TriggerEval.shouldFire(trigger, "r", st, ctx)) {
-            TriggerEval.onFire(trigger, "r", st, ctx)
-            val rootDone = TriggerEval.finished("r", st)
-            val (pane, next) = fireFrom(key, s, withTrig(w, st),
-              if (w._4) LATE else ON_TIME, isFinal = rootDone)
-            out = pane :: out
-            if (rootDone)
-              windows.updateValue(s, (next._1, fn.createAccumulator(), next._3,
-                next._4, 0L, true, Nil))
-            else windows.updateValue(s, next)
-          }
+        } else if (!rec._6 && expiry <= rec._1) {
+          // end-of-window with allowedLateness > 0: the ON_TIME
+          // opportunity, composite roots may also finish here. A timer
+          // before end-of-window is a proc-time catch-up and must not
+          // report wmPastEnd — that would fire AfterWatermark children
+          // early
+          val w = new Win(rec)
+          if (expiry == w.end || TriggerEval.armedDeadline(w.trig))
+            evalAndFire(k, s, w, wmPastEnd = expiry == w.end, nowProc).foreach { p =>
+              out = p :: out; windows.updateValue(s, w.record)
+            }
+          open += w
         }
         // stale timers from merged-away windows match nothing: ignored
       }
+      armCatchupTimer(wmNow, open)
       out.reverseIterator
     }
+  }
+
+  /** Every entry point's wiring: group `events`, run the pane processor. */
+  private def paneAggregate[G, K, V, ACC, OUT](events: Dataset[(K, Long, V)])(
+      group: ((K, Long, V)) => G, userKey: G => K, assign: (Long, V) => (Long, Long),
+      fn: CombineFn[V, ACC, OUT], trigger: TriggerAst, allowedLatenessMs: Long,
+      accumulating: Boolean)(
+      implicit gEnc: Encoder[G], wEnc: Encoder[SessionW[ACC]],
+      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
+    Stateful.requireRocksDBStateStore(events.sparkSession)
+    events.groupByKey(group).transformWithState(
+      new PaneProcessor(fn, trigger, allowedLatenessMs, accumulating, userKey, assign),
+      TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Session-windowed triggered aggregation with the DEFAULT trigger shape
@@ -892,14 +651,9 @@ object Triggers {
       allowedLatenessMs: Long = 0L,
       accumulating: Boolean = true)(
       implicit kEnc: Encoder[K], accEnc: Encoder[SessionW[ACC]],
-      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
-    Stateful.requireRocksDBStateStore(events.sparkSession)
-    events.groupByKey(_._1)
-      .transformWithState(
-        new SessionProcessor[K, V, ACC, OUT](fn, assign, allowedLatenessMs,
-          accumulating, trigger),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] =
+    paneAggregate(events)(_._1, (k: K) => k, assign, fn, trigger, allowedLatenessMs,
+      accumulating)
 
   /** Triggered aggregation with a composite trigger AST. */
   def triggeredAggregateComposite[K, V, ACC, OUT](
@@ -907,12 +661,8 @@ object Triggers {
       trigger: TriggerAst, windowSizeMs: Long, allowedLatenessMs: Long = 0L,
       accumulating: Boolean = true)(
       implicit kEnc: Encoder[(K, Long)], accEnc: Encoder[ACC],
-      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] = {
-    Stateful.requireRocksDBStateStore(assigned.sparkSession)
-    assigned.groupByKey(r => (r._1, r._2))
-      .transformWithState(
-        new CompositeTriggerProcessor[K, V, ACC, OUT](fn, trigger, windowSizeMs,
-          allowedLatenessMs, accumulating),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+      outEnc: Encoder[Pane[K, OUT]]): Dataset[Pane[K, OUT]] =
+    paneAggregate(assigned)(r => (r._1, r._2), (g: (K, Long)) => g._1,
+      (ws: Long, _: V) => (ws, ws + windowSizeMs), fn, trigger, allowedLatenessMs,
+      accumulating)(kEnc, windowEncoder(accEnc), outEnc)
 }

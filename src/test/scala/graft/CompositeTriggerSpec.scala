@@ -205,6 +205,29 @@ class CompositeTriggerSpec extends SparkSpec {
     assert(panes == Seq((3L, 0, "ON_TIME", true)), panes.toString)
   }
 
+  test("state layout: one state row per open window") {
+    // each (key, window) is ONE MapState record — accumulator, pane
+    // metadata and trigger state together; timers live in the store's
+    // internal column families, which numRowsTotal leaves out
+    val (keys, wins) = (3, 4)
+    val input = MemoryStream[(String, Timestamp, Long)](spark)
+    val assigned = Triggers.assignFixedWindows(
+      input.toDF().toDF("k", "t", "v").withWatermark("t", "0 seconds")
+        .as[(String, Timestamp, Long)], 60000L)
+    val panes = Triggers.triggeredAggregateComposite(assigned, countFn,
+      AfterWatermarkEL(Some(AfterCountT(2)), None), windowSizeMs = 60000L,
+      allowedLatenessMs = 3600000L)
+    val q = panes.toDF().writeStream.format("memory").queryName("ct_layout")
+      .outputMode("append").option("checkpointLocation", ckpt()).start()
+    try {
+      input.addData(for (k <- 0 until keys; w <- 0 until wins)
+        yield (s"k$k", new Timestamp(ts("2024-01-01 10:00:10").getTime + w * 60000L), 1L))
+      q.processAllAvailable()
+      val rows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      assert(rows == keys * wins, s"$rows state rows for $keys keys x $wins open windows")
+    } finally q.stop()
+  }
+
   test("AfterProcessingTime.alignedTo: deadline ceiling-aligns to the period grid") {
     // reference TimestampTransform.AlignTo: smallest multiple of period
     // since offset that is NOT before the timestamp

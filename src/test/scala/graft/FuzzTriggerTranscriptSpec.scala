@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.Triggers
@@ -76,7 +77,10 @@ class FuzzTriggerTranscriptSpec extends SparkSpec {
     * the watermark REACHES them (TimerTieProbeSpec), gc-before-end when
     * both expire, closed-window tombstones, FIRE_IF_NON_EMPTY flush. */
   private def interpret(trigger: TriggerAst, steps: Seq[Step],
-                        latenessMs: Long, accumulating: Boolean): Set[PaneT] = {
+                        latenessMs: Long, accumulating: Boolean,
+                        sizeMs: Long = WindowMs,
+                        windowsOf: Long => Seq[Long] = ms => Seq(math.floorDiv(ms, WindowMs) * WindowMs))
+      : Set[PaneT] = {
     final class Win(val ws: Long) {
       val values = scala.collection.mutable.ListBuffer.empty[Long]
       var paneIndex = 0
@@ -87,7 +91,7 @@ class FuzzTriggerTranscriptSpec extends SparkSpec {
       var endPending = true
       var gcPending = true
       val trig: Sim = build(trigger)
-      def end: Long = ws + WindowMs
+      def end: Long = ws + sizeMs
       def gc: Long = end + latenessMs
     }
     val wins = scala.collection.mutable.Map.empty[Long, Win]
@@ -138,13 +142,14 @@ class FuzzTriggerTranscriptSpec extends SparkSpec {
 
     steps.foreach {
       case In(tsSec) =>
-        val byWin = tsSec.map(_ * 1000).groupBy(ms => math.floorDiv(ms, WindowMs) * WindowMs)
+        val byWin = tsSec.map(_ * 1000).flatMap(ms => windowsOf(ms).map(_ -> ms))
+          .groupBy(_._1).map { case (ws, g) => ws -> g.map(_._2) }
         byWin.foreach { case (ws, ms) =>
           // the admissibility check runs BEFORE window-state creation,
           // exactly like the processor's early return: input past the GC
           // horizon must not leave a record behind (a phantom record
           // would GC-flush an empty "!everFired" pane later)
-          if (wm < ws + WindowMs + latenessMs) {
+          if (wm < ws + sizeMs + latenessMs) {
             val w = wins.getOrElseUpdate(ws, new Win(ws))
             if (!w.gone && !w.closed) {
               ms.foreach(m => w.values += m / 1000)
@@ -166,14 +171,20 @@ class FuzzTriggerTranscriptSpec extends SparkSpec {
   // ------------------------------------------------------------ engine run
 
   private def engine(trigger: TriggerAst, steps: Seq[Step], latenessMs: Long,
-                     accumulating: Boolean, sink: String): Set[PaneT] = {
+                     accumulating: Boolean, sink: String): Set[PaneT] =
+    drive(steps, sink) { events =>
+      Triggers.triggeredAggregateComposite(Triggers.assignFixedWindows(events, WindowMs),
+        collectLongsFn, trigger, windowSizeMs = WindowMs, allowedLatenessMs = latenessMs,
+        accumulating = accumulating)
+    }
+
+  /** Drive `steps` through the pane query `build` makes of the event
+    * stream; returns the "data" key's panes. */
+  private def drive(steps: Seq[Step], sink: String)(
+      build: Dataset[(String, Timestamp, Long)] => Dataset[Pane[String, List[Long]]]): Set[PaneT] = {
     val input = MemoryStream[(String, Timestamp, Long)](spark)
-    val assigned = Triggers.assignFixedWindows(
-      input.toDF().toDF("k", "t", "v").withWatermark("t", "0 seconds")
-        .as[(String, Timestamp, Long)], WindowMs)
-    val panes = Triggers.triggeredAggregateComposite(assigned, collectLongsFn,
-      trigger, windowSizeMs = WindowMs, allowedLatenessMs = latenessMs,
-      accumulating = accumulating)
+    val panes = build(input.toDF().toDF("k", "t", "v").withWatermark("t", "0 seconds")
+      .as[(String, Timestamp, Long)])
     val q = panes.toDF("k", "ws", "we", "vs", "idx", "timing", "fin")
       .writeStream.format("memory").queryName(sink)
       .outputMode("append").option("checkpointLocation", ckpt()).start()
@@ -217,5 +228,51 @@ class FuzzTriggerTranscriptSpec extends SparkSpec {
     assert(panesTotal > Trials * 2, s"only $panesTotal panes across $Trials trials")
     assert(earlySeen && lateSeen && finalSeen,
       s"pane-space coverage hole: early=$earlySeen late=$lateSeen final=$finalSeen")
+  }
+
+  test(s"TriggerConfig pane transcripts (fixed and sliding): engine == interpreter " +
+      s"on the lowered trigger (seed=$Seed)") {
+    // the TriggerConfig path (triggeredAggregate / triggeredSlidingAggregate)
+    // against TriggerSim run on the AST the config lowers to: every early
+    // setting, both accumulation modes, zero and non-zero lateness, fixed
+    // and sliding windows
+    val rnd = new scala.util.Random(Seed + 7)
+    val earlies = Seq(NoEarlyFiring, EveryBatch, AfterCount(1), AfterCount(2),
+      AfterCount(3), AfterCount(4))
+    val SlideMs = WindowMs / 2
+    val seen = scala.collection.mutable.Set.empty[String]
+    var panesTotal = 0
+    earlies.zipWithIndex.flatMap { case (e, i) => Seq((e, 2 * i), (e, 2 * i + 1)) }
+      .foreach { case (early, trial) =>
+        val sliding = trial % 2 == 1
+        val accumulating = (trial / 2) % 2 == 0
+        val (steps, latenessSec) = genSchedule(rnd)
+        val cfg = TriggerConfig(windowSizeMs = WindowMs, allowedLatenessMs = latenessSec * 1000,
+          early = early, accumulating = accumulating)
+        val exp =
+          if (!sliding) interpret(cfg.trigger, steps, cfg.allowedLatenessMs, accumulating)
+          else interpret(cfg.trigger, steps, cfg.allowedLatenessMs, accumulating,
+            windowsOf = ms => {
+              val last = math.floorDiv(ms, SlideMs) * SlideMs
+              Iterator.iterate(last)(_ - SlideMs).takeWhile(_ > ms - WindowMs).toSeq
+            })
+        val got = drive(steps, s"trigcfg_$trial") { events =>
+          if (!sliding) Triggers.triggeredAggregate(
+            Triggers.assignFixedWindows(events, WindowMs), collectLongsFn, cfg)
+          else Triggers.triggeredSlidingAggregate(events, collectLongsFn, WindowMs, SlideMs,
+            cfg.allowedLatenessMs, early, accumulating)
+        }
+        assert(got == exp,
+          s"config trial $trial diverged\n cfg=$cfg sliding=$sliding\n steps=$steps\n " +
+            s"engine-only=${(got -- exp).toSeq.sortBy(p => (p._1, p._2))}\n " +
+            s"interp-only=${(exp -- got).toSeq.sortBy(p => (p._1, p._2))}")
+        panesTotal += got.size
+        seen ++= got.map(_._3)
+        if (got.exists(_._4)) seen += "final"
+        seen += (if (latenessSec == 0) "lateness=0" else "lateness>0")
+      }
+    assert(panesTotal > 24, s"only $panesTotal panes across 12 config trials")
+    assert(Set("EARLY", "ON_TIME", "LATE", "final", "lateness=0", "lateness>0").subsetOf(seen),
+      s"config coverage hole: saw $seen")
   }
 }

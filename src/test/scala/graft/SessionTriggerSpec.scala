@@ -181,6 +181,50 @@ class SessionTriggerSpec extends SparkSpec {
       (1L, 14L, Seq(1L, 2L, 3L, 4L), "ON_TIME", true)), panes.toString)
   }
 
+  test("AfterProcessingTime fires for a QUIESCENT session key: other keys' batches wake it") {
+    // the fixed-window catch-up (CompositeTriggerSpec) on merging windows:
+    // key "a" arms a proc-time deadline in session [1,62) and then receives
+    // no further input; only key "z" is driven, and its first batch keeps
+    // the watermark below a's end-of-window. The catch-up event-time timer
+    // must wake "a" once the deadline passes — before end-of-window.
+    val panes = runTriggered("sess_proctime_quiescent", gapSec = 60, latenessSec = 600,
+      Triggers.AfterWatermarkEL(Some(Triggers.AfterProcessingTimeT(250L)), None)) { (input, q) =>
+      input.addData(("a", ts(1), 1L), ("a", ts(2), 2L))
+      q.processAllAvailable() // arm deadline; not yet due -> no pane
+      Thread.sleep(400)       // let the proc-time deadline pass while "a" is idle
+      input.addData(("z", ts(30), 1L))
+      q.processAllAvailable() // z's batch advances the watermark -> catch-up wakes "a"
+      input.addData(("z", ts(300), 1L))
+      q.processAllAvailable() // watermark past end -> ON_TIME
+    }
+    assert(panes.size == 2 && panes.toSet == Set(
+      (1L, 62L, Seq(1L, 2L), "EARLY", false),
+      (1L, 62L, Seq(1L, 2L), "ON_TIME", false)), panes.toString)
+  }
+
+  test("a late element that keeps the session's end fires one LATE pane, " +
+      "not a second end-of-window evaluation") {
+    // Repeatedly(AfterWatermark) is ready again right after each firing, so
+    // an extra end-of-window evaluation would show as an extra empty
+    // refinement. The end-of-window timer runs once per window end (as on
+    // fixed windows; Beam re-arms only the GC timer once the watermark is
+    // past the end): the late element's own evaluation is its one pane.
+    val panes = runTriggered("sess_late_same_end", gapSec = 8, latenessSec = 12,
+      Triggers.RepeatedlyT(Triggers.AfterWatermarkT)) { (input, q) =>
+      input.addData(("a", ts(1), 1L), ("a", ts(2), 2L))
+      q.processAllAvailable() // session [1,10)
+      input.addData(("z", ts(20), 0L))
+      q.processAllAvailable() // end-of-window -> ON_TIME
+      input.addData(("a", ts(1), 1L))
+      q.processAllAvailable() // late, inside the span, end unchanged -> LATE
+      input.addData(("z", ts(100), 0L))
+      q.processAllAvailable() // GC horizon: nothing pending
+    }
+    assert(panes == Seq(
+      (1L, 10L, Seq(1L, 2L), "ON_TIME", false),
+      (1L, 10L, Seq(1L, 1L, 2L), "LATE", false)), panes.toString)
+  }
+
   test("late element into a fired session emits a LATE refinement pane") {
     val panes = run("sess_late", gapSec = 10, latenessSec = 1000) { (input, q) =>
       input.addData(("a", ts(1), 1L), ("a", ts(2), 2L))

@@ -281,10 +281,7 @@ class TriggersSpec extends SparkSpec {
     val stA = freshSt(); val stB = freshSt()
     E.addElements(t, "r", stA, 1L, 5000L) // deadline 6000
     E.addElements(t, "r", stB, 1L, 7000L) // deadline 8000
-    val merged = E.merge(
-      stA.toList.map { case (p, (c, f, d)) => (p, c, f, d) },
-      stB.toList.map { case (p, (c, f, d)) => (p, c, f, d) })
-    val st = freshSt(); merged.foreach { case (p, c, f, d) => st(p) = (c, f, d) }
+    val st = freshSt(); E.merge(st, stA); E.merge(st, stB)
     assert(!E.shouldFire(t, "r", st, TrigCtx(false, 5999L)))
     assert(E.shouldFire(t, "r", st, TrigCtx(false, 6000L)),
       "merged deadline must be the EARLIEST constituent deadline")
